@@ -54,11 +54,19 @@ def batch_daily_job(
     """The reference's batch pipeline (`spark_batch_processor.main`):
     scan (partition-pruned when a run date is given) → keep-last dedup
     per (symbol, day) → daily metrics → partitioned parquet →
-    optional warehouse upsert keyed (symbol, date). Returns the output
-    row count (observed, not a second job)."""
+    optional warehouse upsert keyed (symbol, date). Returns the number
+    of daily rows written.
+
+    The daily frame is materialised once (``localCheckpoint``) and both
+    sinks read that one copy: the input is listed and scanned, and the
+    dedup window and the aggregate are shuffled, once per run instead
+    of once per sink — the reference runs its whole job twice to log a
+    count (`spark_batch_processor.py:75-85`). The returned count is one
+    small job over the materialised rows, not a re-read of the output.
+    The input gate (S7) also rides on it: ``daily`` is empty exactly
+    when the scanned input is (one row per (symbol, date) group, no
+    filter), so an empty scan raises before either sink writes."""
     raw = read_partitioned(spark, input_path, fmt=fmt, year=year, month=month, day=day)
-    if not raw.head(1):
-        raise RuntimeError(f"input gate: no rows at {input_path} (S7)")
     # A4/A5: keep-last per (symbol, day, event time) under an explicit
     # order — the deterministic form of the reference's
     # dropDuplicates(["symbol","date"]) (`spark_batch_processor.py:83`)
@@ -75,7 +83,10 @@ def batch_daily_job(
         price_col=price_col,
         id_col=id_col,
         volume_col=volume_col,
-    )
+    ).localCheckpoint()
+    n = daily.count()
+    if n == 0:
+        raise RuntimeError(f"input gate: no rows at {input_path} (S7)")
     out = daily.withColumn("year", F.year("date")).withColumn(
         "month", F.month("date")
     )
@@ -86,7 +97,7 @@ def batch_daily_job(
         sinks.merge_upsert_parquet(
             spark, daily, warehouse_path, keys=["symbol", "date"]
         )
-    return spark.read.parquet(output_path).count()
+    return n
 
 
 def stream_job(
@@ -396,6 +407,7 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--symbol-col", default="symbol")
     b.add_argument("--ts-col", default="ts")
     b.add_argument("--price-col", default="price")
+    b.add_argument("--id-col")
     b.add_argument("--volume-col")
     b.add_argument("--year", type=int)
     b.add_argument("--month", type=int)
@@ -415,6 +427,8 @@ def main(argv: list[str] | None = None) -> int:
     h.add_argument("--symbol-col", default="symbol")
     h.add_argument("--ts-col", default="ts")
     h.add_argument("--price-col", default="price")
+    h.add_argument("--id-col")
+    h.add_argument("--volume-col")
     args = ap.parse_args(argv)
     spark = get_spark("rtsmdp-job")
     if args.cmd == "historical":
@@ -426,6 +440,8 @@ def main(argv: list[str] | None = None) -> int:
             symbol_col=args.symbol_col,
             ts_col=args.ts_col,
             price_col=args.price_col,
+            id_col=args.id_col,
+            volume_col=args.volume_col,
         )
         for r in run.results:
             print(f"{r.name}: {'ok' if r.ok else 'FAILED'} ({r.error or r.value})")
@@ -439,6 +455,7 @@ def main(argv: list[str] | None = None) -> int:
             symbol_col=args.symbol_col,
             ts_col=args.ts_col,
             price_col=args.price_col,
+            id_col=args.id_col,
             volume_col=args.volume_col,
             year=args.year,
             month=args.month,

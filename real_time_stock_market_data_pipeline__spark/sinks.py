@@ -176,25 +176,45 @@ def input_ready(spark: SparkSession, path: str) -> bool:
         return False
 
 
+def read_parquet_if_present(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path`` (local filesystem), or ``None``
+    when it is genuinely ABSENT: no directory, or no parquet file under
+    it. Any OTHER read failure raises — an unreadable footer, a
+    permission error or a transient I/O fault on an existing table is
+    not "no table". Callers that default ``None`` to "start a new
+    table" would otherwise replace stored rows with the batch alone
+    (the merge sinks below) or write a second layout into a legacy one
+    (``stored_columns``). One listing decides presence; the table is
+    then read once, with no probe job."""
+    for _, dirs, files in os.walk(path):
+        # skip what Spark's own listing skips: hidden names and commit
+        # scratch (``.spark-staging-*``, ``_temporary``), so parquet
+        # files that only a crashed first write left behind are not a
+        # table that then fails to read
+        dirs[:] = [d for d in dirs if _listed(d)]
+        if any(f.endswith(".parquet") and _listed(f) for f in files):
+            return spark.read.parquet(path)
+    return None
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing includes a file or directory of
+    this name (hidden and ``_``-prefixed names are skipped, except
+    ``_``-prefixed partition directories such as ``_k=1``)."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
 def stored_columns(spark: SparkSession, path: str) -> list[str] | None:
     """Columns of the parquet table at ``path``, or ``None`` when the
-    table is genuinely ABSENT (no directory, or no parquet file under
-    it). Any OTHER read failure re-raises — the layout-resolution call
-    sites (streaming/pipeline.py) default ``None`` to the new bp
-    layout, and treating a transient error on an existing LEGACY
-    table as "absent" would write ``bp=`` subdirectories into a
-    flat/cell/pfx layout, mixing partition depths and breaking every
-    subsequent whole-table read (round-15 ADVICE)."""
-    if not os.path.isdir(path):
-        return None
-    has_parquet = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(path)
-        for f in files
-    )
-    if not has_parquet:
-        return None
-    return spark.read.parquet(path).columns
+    table is absent (:func:`read_parquet_if_present`). The
+    layout-resolution call sites (streaming/pipeline.py) default
+    ``None`` to the new bp layout, so a transient error on an existing
+    LEGACY table must raise rather than read as absent: otherwise
+    ``bp=`` subdirectories land in a flat/cell/pfx layout, mixing
+    partition depths and breaking every subsequent whole-table read
+    (round-15 ADVICE)."""
+    current = read_parquet_if_present(spark, path)
+    return None if current is None else current.columns
 
 
 def with_row_observation(df: DataFrame, name: str = "metrics") -> DataFrame:
@@ -242,6 +262,13 @@ def merge_upsert_parquet(
     ``.old`` directory survives, it is renamed back before merging.
     Concurrent readers can still observe the gap — use a table format
     with a transaction log when readers are live during writes.
+
+    Absent versus unreadable: a ``path`` with no parquet file under it
+    is an absent table and the batch becomes the whole table. A table
+    that exists but cannot be read (corrupt footer, I/O error) makes
+    the merge RAISE before anything is swapped, leaving the stored
+    files untouched — it is never treated as absent, which would
+    replace every committed row with the batch alone.
     """
     old = path + ".old"
     if not os.path.exists(path) and os.path.exists(old):
@@ -252,11 +279,11 @@ def merge_upsert_parquet(
         # make the rename below fail with ENOTEMPTY (found by
         # tests/test_crash_recovery.py failure injection)
         shutil.rmtree(old)
-    if input_ready(spark, path):
-        current = spark.read.parquet(path)
-        merged = merge_upsert(current, batch.select(*current.columns), keys)
-    else:
+    current = read_parquet_if_present(spark, path)
+    if current is None:
         merged = batch
+    else:
+        merged = merge_upsert(current, batch.select(*current.columns), keys)
     tmp = tempfile.mkdtemp(prefix="merge_upsert_", dir=os.path.dirname(path) or ".")
     try:
         merged.write.mode("overwrite").parquet(tmp)
@@ -332,6 +359,12 @@ def merge_upsert_parquet_partitioned(
     Delta/Iceberg this whole function is a transactional
     ``MERGE INTO`` and the caveat disappears — that is the 100 TB
     deployment shape; this is its local-FS stand-in.
+
+    Absent versus unreadable: as in :func:`merge_upsert_parquet`, only
+    a ``path`` with no parquet file under it starts a new table from
+    the batch. A file the merge must read that cannot be read (corrupt
+    footer in a touched partition, I/O error) fails the write job
+    before its commit, so no partition directory is replaced.
     """
     touched = [
         r[0] for r in batch.select(partition_col).distinct().collect()
@@ -347,11 +380,13 @@ def merge_upsert_parquet_partitioned(
     touched_pred = F.col(partition_col).isin(non_null)
     if len(non_null) < len(touched):
         touched_pred = touched_pred | F.col(partition_col).isNull()
-    if input_ready(spark, path):
-        current = spark.read.parquet(path).filter(touched_pred)
-        merged = merge_upsert(current, batch.select(*current.columns), keys)
-    else:
+    current = read_parquet_if_present(spark, path)
+    if current is None:
         merged = batch
+    else:
+        merged = merge_upsert(
+            current.filter(touched_pred), batch.select(*current.columns), keys
+        )
     (
         # repartition on the partition key so each touched directory
         # gets coherent files (without this every shuffle task writes

@@ -84,6 +84,65 @@ def test_batch_daily_job_partition_pruned_run(spark, sf_dir):
     assert dates == {"2024-01-02"}
 
 
+def test_batch_daily_job_reads_input_once(spark, sf_dir, monkeypatch):
+    """Both sinks are fed from one materialised daily frame: the frame
+    handed to the warehouse merge holds no scan of the raw input (so
+    the merge cannot re-run the scan, dedup and aggregate), and the
+    returned count is the number of rows the output holds."""
+    from real_time_stock_market_data_pipeline__spark import plans
+
+    tmp = tempfile.mkdtemp(prefix="job_")
+    raw = _partitioned_input(spark, sf_dir, tmp)
+    out = os.path.join(tmp, "daily")
+    wh = os.path.join(tmp, "warehouse")
+    merge = jobs.sinks.merge_upsert_parquet
+    batches = []
+
+    def capture(spark_, batch, path, keys):
+        batches.append(batch)
+        return merge(spark_, batch, path, keys)
+
+    monkeypatch.setattr(jobs.sinks, "merge_upsert_parquet", capture)
+    n = jobs.batch_daily_job(
+        spark,
+        raw,
+        out,
+        warehouse_path=wh,
+        symbol_col="event_type",
+        ts_col="ts",
+        price_col="value",
+        id_col="event_id",
+    )
+    assert len(batches) == 1
+    plan = plans.physical_plan(batches[0])
+    assert "FileScan" not in plan, plan
+    assert n == spark.read.parquet(out).count()
+    assert n == spark.read.parquet(wh).count()
+
+
+def test_batch_daily_job_empty_pruned_run_writes_nothing(spark, sf_dir):
+    """A run date with no partition is an empty scan: the input gate
+    raises before either sink writes."""
+    tmp = tempfile.mkdtemp(prefix="job_")
+    raw = _partitioned_input(spark, sf_dir, tmp)
+    out = os.path.join(tmp, "daily")
+    wh = os.path.join(tmp, "warehouse")
+    with pytest.raises(RuntimeError, match="input gate: no rows"):
+        jobs.batch_daily_job(
+            spark,
+            raw,
+            out,
+            warehouse_path=wh,
+            symbol_col="event_type",
+            ts_col="ts",
+            price_col="value",
+            id_col="event_id",
+            year=1999,
+        )
+    assert not os.path.exists(out)
+    assert not os.path.exists(wh)
+
+
 def test_stream_job_end_to_end(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="job_")
     target = os.path.join(tmp, "metrics")
@@ -215,3 +274,31 @@ def test_corpus_pipeline_funnel(spark, sf_dir, tmp_path):
     }
     packs = spark.read.parquet(str(tmp_path / "out" / "packs"))
     assert packs.count() == vals["token_pack"]
+
+
+def test_cli_historical_passes_id_col(spark, sf_dir, monkeypatch, capsys):
+    """`historical` on the command line reaches the event-id tie-break
+    of the keep-last dedup and lands the same warehouse rows as the
+    Python call with the same arguments."""
+    tmp = tempfile.mkdtemp(prefix="cli_")
+    raw = _partitioned_input(spark, sf_dir, tmp)
+    cols = dict(symbol_col="event_type", ts_col="ts", price_col="value")
+    py_wh = os.path.join(tmp, "py_wh")
+    run = jobs.historical_pipeline(
+        spark, raw, os.path.join(tmp, "py_out"), py_wh, id_col="event_id",
+        **cols,
+    )
+    assert run.ok, [r.error for r in run.results]
+
+    monkeypatch.setattr(jobs, "get_spark", lambda *a, **k: spark)
+    cli_wh = os.path.join(tmp, "cli_wh")
+    rc = jobs.main([
+        "historical", "--raw", raw, "--output", os.path.join(tmp, "cli_out"),
+        "--warehouse", cli_wh, "--symbol-col", "event_type", "--ts-col", "ts",
+        "--price-col", "value", "--id-col", "event_id",
+    ])
+    assert rc == 0, capsys.readouterr().out
+    py_rows = spark.read.parquet(py_wh).collect()
+    cli_rows = spark.read.parquet(cli_wh).collect()
+    assert len(py_rows) > 0
+    assert sorted(map(tuple, cli_rows)) == sorted(map(tuple, py_rows))
